@@ -6,10 +6,13 @@ already exists in the sink are dropped before the append. The blob
 store's write-once `<root>/<sha256[:2]>/<sha256>` layout
 (storage/blob_store.py:9-14) becomes a hash-prefix partition column.
 
-Scale notes: the anti-join shuffles on the dedup key — at 100 TB the
-existing-keys side should be a key-only projection (two string columns),
-which Catalyst reduces to via column pruning; if the sink is huge,
-partition it by `blob_bucket` so the merge prunes to matching prefixes.
+Scale notes: the anti-join shuffles on the dedup key. The existing
+sink is read with its declared columns (`storage.read_sink`), so
+planning opens no parquet footers, and column pruning cuts the existing
+side down to the two key columns. The new side comes from the run's one
+materialized batch (`pipeline.run_offline_ingest`), so the merge does not
+re-run the fetch and parse. If the sink is huge, partition it by
+`blob_bucket` so the merge prunes to matching prefixes.
 With a transactional table format this is `MERGE WHEN NOT MATCHED`; on
 plain parquet it is read-project-antijoin-append (non-transactional —
 known gap vs SQLite atomicity, SURVEY §7.4).
@@ -19,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from api_etl_pipeline_spark.ingest.storage import BLOBS_COLUMNS, read_sink
 
 DEDUP_KEYS = ("source_url", "sha256")
 
@@ -55,12 +60,9 @@ def write_blobs(df: DataFrame, blob_root: str) -> None:
     append; the 2-char prefix keeps directory fan-out bounded (256 dirs)
     and aligns file layout with the dedup shuffle partitioning."""
     new = df.select(F.col("sha256"), F.col("body")).dropDuplicates(["sha256"])
-    try:
-        existing = new.sparkSession.read.parquet(blob_root).select("sha256")
-    except Exception:
-        existing = None
+    existing = read_sink(new.sparkSession, blob_root, BLOBS_COLUMNS)
     if existing is not None:
-        new = new.join(existing, "sha256", "left_anti")
+        new = new.join(existing.select("sha256"), "sha256", "left_anti")
     (
         new.withColumn("bucket", blob_bucket(F.col("sha256")))
         .write.mode("append")

@@ -19,17 +19,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SYNTH_HEADERS = '{"content-type": "application/json"}'
+PLAN_SCHEMA = "array<struct<item_index:int,item_key:string,fixture_name:string,url:string>>"
 
 
 def plan_source(spark: SparkSession, items: list[dict], limit: int = 1) -> DataFrame:
     """The run's work-item table (S12; base.py:18-20). Applies the
-    reference's min-1 limit guard (F11: `[:max(limit, 1)]`)."""
+    reference's min-1 limit guard (F11: `[:max(limit, 1)]`). The items are
+    literals of one JVM-side row, so running the plan starts no Python
+    worker (a `createDataFrame` of a list does)."""
     n = max(limit, 1)
-    rows = [(i, item.get("cik10") or item.get("q") or "", item["fixture_name"], item["url"])
-            for i, item in enumerate(items[:n])]
-    return spark.createDataFrame(
-        rows, "item_index int, item_key string, fixture_name string, url string"
-    )
+    rows = [
+        F.struct(
+            F.lit(i),
+            F.lit(item.get("cik10") or item.get("q") or ""),
+            F.lit(item["fixture_name"]),
+            F.lit(item["url"]),
+        )
+        for i, item in enumerate(items[:n])
+    ]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*rows).cast(PLAN_SCHEMA)))
 
 
 def fixture_scan(spark: SparkSession, fixture_root: str, provider: str) -> DataFrame:
@@ -50,8 +58,13 @@ def fetch_offline(plan: DataFrame, fixtures: DataFrame, provider: str) -> DataFr
     Missing fixture → status 0 row (transport-error analog) instead of an
     exception, so one bad item can't fail the job (quarantine downstream).
     """
-    joined = plan.join(F.broadcast(fixtures), "fixture_name", "left")
-    return joined.select(
+    return response_envelope(plan.join(F.broadcast(fixtures), "fixture_name", "left"), provider)
+
+
+def response_envelope(fetched: DataFrame, provider: str) -> DataFrame:
+    """The captured-response columns over (item_index, item_key, url, body)
+    rows whose body is null when nothing was fetched."""
+    return fetched.select(
         "item_index",
         "item_key",
         # deterministic surrogate response id (replaces SQLite AUTOINCREMENT,

@@ -74,3 +74,22 @@ def test_iterative_suite_under_reliable_checkpoint(spark, tmp_path, monkeypatch)
         assert ckpt_files, "reliable mode wrote nothing to the checkpoint dir"
     finally:
         monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT")
+
+
+def test_ingest_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    """The offline ingest materializes its fetched batch through
+    eager_checkpoint, so the reliable mode must carry it too: same
+    counts, and the batch lands in the checkpoint dir."""
+    from pathlib import Path
+
+    from api_etl_pipeline_spark.ingest.pipeline import run_offline_ingest
+
+    fixtures = str(Path(__file__).parent / "fixtures")
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ingest_ckpt"))
+    try:
+        res = run_offline_ingest(spark, "sec_edgar", fixtures, str(tmp_path / "wh"))
+        assert (res.responses, res.artifacts, res.parse_errors) == (2, 1, 0)
+        assert list((tmp_path / "ingest_ckpt").rglob("part-*")), "no reliable checkpoint written"
+    finally:
+        monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT")

@@ -48,6 +48,89 @@ def test_dedup_idempotent_rerun(spark, tmp_path):
     assert spark.read.parquet(f"{wh}/artifacts").count() == 1
 
 
+def _corrupt_sec_root(tmp_path) -> str:
+    root = tmp_path / "fixtures"
+    shutil.copytree(FIXTURES, root)
+    (root / "sec_edgar" / "submissions.json").write_text("{}")
+    return str(root)
+
+
+def test_runs_row_matches_call_counts(spark, tmp_path):
+    """The `runs` summary row of each call carries that call's counts, for
+    an insert, a dedup and a quarantine call into one warehouse, and the
+    responses sink holds every response the calls counted."""
+    wh = str(tmp_path / "wh")
+    calls = {
+        "insert": run_offline_ingest(spark, "sec_edgar", FIXTURES, wh, run_id="insert"),
+        "dedup": run_offline_ingest(spark, "sec_edgar", FIXTURES, wh, run_id="dedup"),
+        "quarantine": run_offline_ingest(
+            spark, "sec_edgar", _corrupt_sec_root(tmp_path), wh, run_id="quarantine"
+        ),
+    }
+    assert {k: (r.responses, r.artifacts, r.parse_errors) for k, r in calls.items()} == {
+        "insert": (2, 1, 0),
+        "dedup": (2, 0, 0),
+        "quarantine": (1, 0, 1),
+    }
+    runs = {r.run_id: r for r in spark.read.json(f"{wh}/runs").collect()}
+    assert {k: (r.responses, r.artifacts, r.parse_errors) for k, r in runs.items()} == {
+        k: (r.responses, r.artifacts, r.parse_errors) for k, r in calls.items()
+    }
+    assert {r.status for r in runs.values()} == {"succeeded"}
+    assert spark.read.parquet(f"{wh}/responses").count() == sum(
+        r.responses for r in calls.values()
+    )
+
+
+def test_unreadable_artifacts_sink_fails_the_run(spark, tmp_path):
+    """A sink that exists but cannot be read must fail the run, not pass
+    for an empty sink: treating it as empty would re-insert an artifact
+    the sink already holds and break the dedup guarantee."""
+    wh = tmp_path / "wh"
+    run_offline_ingest(spark, "sec_edgar", FIXTURES, str(wh))
+    assert run_offline_ingest(spark, "sec_edgar", FIXTURES, str(wh)).artifacts == 0
+    good = sorted(str(p) for p in (wh / "artifacts").glob("part-*.parquet"))
+    (wh / "artifacts" / "0-unreadable.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_offline_ingest(spark, "sec_edgar", FIXTURES, str(wh))
+    after = sorted(str(p) for p in (wh / "artifacts").glob("part-*.parquet"))
+    assert spark.read.parquet(*after).count() == 1
+    assert after == good
+
+
+def test_warm_call_job_count(spark, tmp_path):
+    """A call into an existing warehouse runs a fixed, small number of
+    Spark jobs: the fetch lineage is materialized once and every count
+    rides a write. The 11 jobs of an insert call:
+      1  broadcast of the fixture bytes (metadata and artifact joins
+         share one exchange)
+      2  eager checkpoint of the fetched, parsed batch
+      3  blobs: broadcast of the existing hashes
+      4  blobs: anti-join, then the shuffle of the in-batch distinct
+      5  blobs: append
+      6  artifacts: shuffle of the existing sink's distinct keys
+      7  artifacts: broadcast of those keys
+      8  artifacts: anti-join, then the shuffle of the in-batch distinct
+      9  artifacts: append (observes the artifact count)
+     10  responses append (observes the response and quarantine counts)
+     11  runs summary row append
+    Before the batch was materialized, each write and count re-ran the
+    fetch, and a call ran 31-34 jobs."""
+    wh = str(tmp_path / "wh")
+    run_offline_ingest(spark, "sec_edgar", FIXTURES, wh)
+    sc = spark.sparkContext
+    group = f"warm-ingest-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_offline_ingest(spark, "nrc_adams_aps", FIXTURES, wh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (res.responses, res.artifacts, res.parse_errors) == (2, 1, 0)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 11, f"warm ingest call ran {len(jobs)} jobs"
+
+
 @pytest.mark.parametrize("provider,fixture", [
     ("sec_edgar", "submissions.json"),
     ("nrc_adams_aps", "search.json"),
