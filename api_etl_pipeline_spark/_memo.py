@@ -24,6 +24,7 @@ insert, so the memo cannot grow across a long pytest run.
 
 from __future__ import annotations
 
+import contextvars
 import time
 from collections.abc import Callable
 from typing import Any
@@ -35,6 +36,19 @@ _MEMO: dict[tuple, Any] = {}
 # one-time build walls, keyed by label — bench.shared_walls() merges this
 # with dedup.SHARED_BUILD_WALLS into construction_shared_sec
 SHARED_BUILD_WALLS: dict[str, float] = {}
+
+# name (key[0]) of the build whose builder is running on this context
+# (the innermost one when builds nest); plan-lint labels the checkpoints
+# a shared build takes with it, so they lint the same whichever consumer
+# constructs first
+_BUILDING: contextvars.ContextVar[str | None] = contextvars.ContextVar(
+    "memo_building", default=None
+)
+
+
+def building() -> str | None:
+    """Name of the memo build currently running its builder, if any."""
+    return _BUILDING.get()
 
 
 def session_memo(
@@ -49,7 +63,11 @@ def session_memo(
     if full in _MEMO:
         return _MEMO[full]
     t0 = time.perf_counter()
-    val = builder()
+    token = _BUILDING.set(key[0])
+    try:
+        val = builder()
+    finally:
+        _BUILDING.reset(token)
     if wall_label is not None:
         SHARED_BUILD_WALLS[wall_label] = SHARED_BUILD_WALLS.get(wall_label, 0.0) + (
             time.perf_counter() - t0

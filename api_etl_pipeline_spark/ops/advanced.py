@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
+from api_etl_pipeline_spark.ops._compat import exact_sum
 from api_etl_pipeline_spark.registry import query
 from api_etl_pipeline_spark.tables import load_table
 
@@ -942,12 +943,13 @@ def q52_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# x26's cross-bucket decomposition width: buckets are floor(price / W),
-# so the bucket-grain relation is bounded by the PRICE DOMAIN (TPC-H
-# extendedprice ~ [900, 105k] -> ~410 buckets at W=256) independent of
-# corpus size; W only shifts work between the bounded offsets window and
-# the parallel within-bucket windows, never the result (the bucket key
-# is monotone in price, and decimal regrouping is exact)
+# x26's bucket width: buckets are floor(price / W), so the bucket-grain
+# relation is bounded by the PRICE DOMAIN (TPC-H extendedprice ~
+# [900, 105k] -> ~410 buckets at W=256) independent of corpus size, and
+# the one median bucket each flag re-aggregates holds at most W * 100
+# distinct 2-decimal prices. W only shifts work between the bucket-grain
+# window and the per-price pass over the median bucket, never the result
+# (the bucket key is monotone in price, and the weight sums are exact)
 X26_BUCKET_WIDTH = 256
 
 
@@ -979,78 +981,72 @@ def x26_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'half the volume trades below this price' statistic that plain
     percentile_approx/q26 cannot express).
 
-    Two stages: a map-side-combinable hash aggregate collapses the
-    fact table to one weight per (group, price) — the shuffle and the
-    window sort then walk DISTINCT PRICES, not rows (measured: the
-    row-walking formulation probed 8.4x under 10x data; this one 1.3x) —
-    and a running window finds the first price whose doubled cumulative
-    weight reaches the group total. Price is unique per group after the
-    pre-aggregation, so the cumulative order needs no tie-break columns
-    and is total on both engines. Weights go through the
-    exact-DECIMAL convention (ops/_compat.py) so the boundary
+    Two passes over lineitem, neither of which sorts the distinct-price
+    relation:
+
+    1. Per-(flag, bucket) weight sums, bucket = floor(price / W), which
+       is monotone in price. One window at bucket grain (bounded by the
+       price domain, not the data) gives each bucket's inclusive
+       cumulative weight and the flag total; the target is the FIRST
+       bucket with 2 * cumulative >= total, picked with a
+       ``min(bkt) over flag`` window. It carries its exclusive offset
+       ``cum_before`` and the ``total``: one row per flag.
+    2. lineitem broadcast-joined to that target keeps only the median
+       bucket's rows; they are aggregated per price, and a running sum
+       from ``cum_before`` finds the first price whose doubled
+       cumulative weight reaches the total.
+
+    The median lies in the target bucket because every earlier bucket
+    ends below half the total and the target ends at or above it. Price
+    is unique per group after the per-price aggregate, so the running
+    order needs no tie-break and is total on both engines. Weights are
+    exact decimal sums (ops/_compat.exact_sum) so the boundary
     comparison is exact on both engines — with double accumulation the
     2*cumw >= total test could flip either way at the boundary row
     depending on summation order. The reported price is an element of
     the data, not an aggregate, so no float discipline is needed on the
     output."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per_price = li.groupBy("l_returnflag", "l_extendedprice").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("w")
+    li = load_table(spark, sf_dir, "lineitem").withColumn(
+        "bkt",
+        F.floor(F.col("l_extendedprice") / F.lit(X26_BUCKET_WIDTH)).cast("bigint"),
     )
-    # r15 two-phase form (r14 verdict item 4, guide §2.2 two-level
-    # aggregation): the r14 shape ran ONE window partitioned by the
-    # 3-value return flag over every distinct (flag, price) row — all
-    # distinct prices flowed through <=3 tasks (the bench's most
-    # core-starve-sensitive stage, and a serialized per-flag sort of
-    # the whole price distribution at 100 TB). Exact decomposition:
-    # bucket prices by a MONOTONE fixed-width key (floor(price/W) —
-    # bucket order == price order, count bounded by the price domain,
-    # not the data), compute per-(flag, bucket) subtotals, turn them
-    # into exclusive cross-bucket offsets with a window over the
-    # bucket-grain relation (bounded rows), broadcast the offsets back,
-    # and run the running sum WITHIN each (flag, bucket) partition in
-    # parallel: cumw(p) = offset(bucket(p)) + within-bucket running
-    # sum — the identical exact-DECIMAL value (decimal addition is
-    # exact, so the regrouping is equality-preserving, boundary
-    # comparisons included). The distinct-price relation never passes
-    # through a per-flag sort; every remaining per-flag stage is
-    # bucket-grain or 3-row.
-    bkt = F.floor(F.col("l_extendedprice") / F.lit(X26_BUCKET_WIDTH)).cast(
-        "bigint"
+    qty = F.col("l_quantity")
+    per_bucket = li.groupBy("l_returnflag", "bkt").agg(
+        exact_sum(qty, 2).alias("bw")
     )
-    pp = per_price.withColumn("bkt", bkt)
-    # bucket subtotals aggregate the FACT TABLE directly rather than
-    # per_price: deriving them from pp puts the join's pushed-down
-    # null-filters asymmetrically into the two branches, defeating
-    # ReuseExchange — the (flag, price) aggregation then ran twice
-    # (measured 1.4 s vs 0.9 s before). The direct pass is map-side
-    # combined straight to (flag, bucket) grain (~1.2k groups), so its
-    # shuffle is bucket-grain and the extra scan is a cheap concurrent
-    # counting pass; exact-DECIMAL regrouping keeps every sum identical.
-    per_bucket = li.groupBy("l_returnflag", bkt.alias("bkt")).agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("bw")
-    )
-    w_off = (
+    w_cum = (
         Window.partitionBy("l_returnflag")
         .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_tot = Window.partitionBy("l_returnflag")
-    offs = per_bucket.select(
-        "l_returnflag",
-        "bkt",
-        F.coalesce(
-            F.sum("bw").over(w_off), F.lit(0).cast("decimal(38,2)")
-        ).alias("cum_before"),
-        F.sum("bw").over(w_tot).alias("total"),
+    w_flag = Window.partitionBy("l_returnflag")
+    target = (
+        per_bucket.select(
+            "l_returnflag",
+            "bkt",
+            "bw",
+            F.sum("bw").over(w_cum).alias("cum"),
+            F.sum("bw").over(w_flag).alias("total"),
+        )
+        .filter(2 * F.col("cum") >= F.col("total"))
+        .withColumn("first_bkt", F.min("bkt").over(w_flag))
+        .filter(F.col("bkt") == F.col("first_bkt"))
+        .select(
+            "l_returnflag",
+            "bkt",
+            (F.col("cum") - F.col("bw")).alias("cum_before"),
+            "total",
+        )
     )
     w_in = (
-        Window.partitionBy("l_returnflag", "bkt")
+        Window.partitionBy("l_returnflag")
         .orderBy("l_extendedprice")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        pp.join(F.broadcast(offs), ["l_returnflag", "bkt"])
+        li.join(F.broadcast(target), ["l_returnflag", "bkt"])
+        .groupBy("l_returnflag", "l_extendedprice", "cum_before", "total")
+        .agg(exact_sum(qty, 2).alias("w"))
         .withColumn("cumw", F.col("cum_before") + F.sum("w").over(w_in))
         .filter(2 * F.col("cumw") >= F.col("total"))
         .groupBy("l_returnflag")

@@ -96,14 +96,12 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("samp04_temperature_mix", "BroadcastNestedLoopJoin"): "single-row (budget, w_sum) broadcast",
     ("llm03_dataset_card", "BroadcastNestedLoopJoin"): "single-row corpus-total broadcast",
     ("sim01_cosine_topk", "BroadcastNestedLoopJoin"): "5-row query-vector broadcast, non-equi self-exclusion",
-    # r15: the exact-truth leg is the shared sim01_truth build; its
-    # checkpoint plan is captured by whichever consumer constructs
-    # first in a cold all_queries() pass — ret02, which the r15 driver
-    # prefix rotation places before sim11
-    ("ret02_ann_rank_quality+ckpt", "BroadcastNestedLoopJoin"): (
-        "inherited exact leg IS sim01 — same 5-row query-vector "
-        "broadcast, non-equi self-exclusion (lives in the shared "
-        "sim01_truth checkpoint subplan, built by the first consumer)"
+    # shared builds lint under "<build>+ckpt" (see lint_registry), so
+    # these entries hold whichever consumer constructs first
+    ("sim01_truth+ckpt", "BroadcastNestedLoopJoin"): (
+        "the exact-truth leg IS sim01 — same 5-row query-vector "
+        "broadcast, non-equi self-exclusion (the shared sim01_truth "
+        "checkpoint subplan that ret02 and sim11 consume)"
     ),
     ("cur03_snapshot_diff", "SortMergeJoin"): (
         "snapshot diff is a FULL OUTER join of two same-size corpus "
@@ -219,8 +217,9 @@ ALLOWED: dict[tuple[str, str], str] = {
         "single-row corpus-total broadcast folded into the DF-ratio "
         "filter — the tx08 shape"
     ),
-    # --- pre-checkpoint plans (<name>+ckpt): what the checkpoint
-    # observer sees INSIDE iterative loops before lineage truncation ---
+    # --- pre-checkpoint plans (<name>+ckpt, or <build>+ckpt inside a
+    # shared build): what the checkpoint observer sees INSIDE iterative
+    # loops before lineage truncation ---
     # (round 14: the former dd09/dd10/samp06 "+ckpt" SortMergeJoin
     # entries are gone — the three consume the SHARED dd04_components
     # build, and at lint scale (sf0.01, ~70 edges) the size dispatch
@@ -238,21 +237,21 @@ ALLOWED: dict[tuple[str, str], str] = {
         "forcing a broadcast hint would be wrong at a 100 TB dup-heavy "
         "corpus"
     ),
-    ("gr01_pagerank+ckpt", "SortMergeJoin"): (
+    ("gr01_ranks+ckpt", "SortMergeJoin"): (
         "per-round ranks⋈edges contribution join is fact-fact on src — "
         "the canonical PageRank shuffle; 2 exchanges per round as "
         "documented in SCALE.md"
     ),
-    ("gr01_pagerank+ckpt", "BroadcastNestedLoopJoin"): (
+    ("gr01_ranks+ckpt", "BroadcastNestedLoopJoin"): (
         "single-row dangling-mass scalar aggregate broadcast into each "
         "round's rank update"
     ),
-    ("gr02_bfs_hops+ckpt", "SortMergeJoin"): (
+    ("gr02_bfs+ckpt", "SortMergeJoin"): (
         "frontier expansion joins frontier⋈edges then anti-joins the "
         "known set — both fact-fact on vertex id; each edge is "
         "traversed once across all rounds"
     ),
-    ("gr03_triangle_stats+ckpt", "SortMergeJoin"): (
+    ("gr03_oriented+ckpt", "SortMergeJoin"): (
         "the oriented-edge subtree captured pre-checkpoint contains the "
         "same degree-bounded wedge self-join allowlisted on the final "
         "plan"
@@ -638,10 +637,11 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
     that checkpointing would otherwise hide (round-5 advice): iterative
     operators (gr01/gr02, dd09…) truncate lineage per round, so their
     final plan is just an RDD scan. A checkpoint observer captures each
-    pre-truncation DataFrame and lints it under `<name>+ckpt`, deduped
-    by node kind (every round has the same shape), so the per-round
-    join/shuffle anti-pattern coverage applies to iterative queries too
-    instead of being a prose-documented blind spot."""
+    pre-truncation DataFrame and lints it under `<name>+ckpt` (or
+    `<build>+ckpt` when a shared build takes it), deduped by node kind
+    (every round has the same shape), so the per-round join/shuffle
+    anti-pattern coverage applies to iterative queries too instead of
+    being a prose-documented blind spot."""
     from api_etl_pipeline_spark.checkpoint import checkpoint_observer
     from api_etl_pipeline_spark.registry import all_queries
 
@@ -660,9 +660,18 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
     _memo._MEMO.clear()
     _dedup._COMPONENTS_CACHE.clear()
     groups_satisfied: set[str] = set()
+    shared_builds = {b for bs in SHARED_CHECKPOINT_GROUPS.values() for b in bs}
     for name, spec in all_queries().items():
-        captured: list[str] = []
-        with checkpoint_observer(lambda df: captured.append(plan_text(df))):
+        # (lint label, plan): a checkpoint taken inside a shared build
+        # lints as "<build>+ckpt", the same whichever consumer builds it
+        captured: list[tuple[str, str]] = []
+
+        def capture(df: DataFrame, name: str = name) -> None:
+            build = _memo.building()
+            owner = build if build in shared_builds else name
+            captured.append((f"{owner}+ckpt", plan_text(df)))
+
+        with checkpoint_observer(capture):
             final_plan = plan_text(spec.fn(spark, sf_dir))
         out.extend(lint_plan(name, final_plan))
         groups = SHARED_CHECKPOINT_GROUPS.get(name, ())
@@ -693,8 +702,8 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
                                "captures pre-checkpoint plans but is missing from "
                                "CHECKPOINTING_QUERIES — update the constant"))
         seen: set[tuple[str, str]] = set()
-        for plan in captured:
-            for f in lint_plan(f"{name}+ckpt", plan):
+        for label, plan in captured:
+            for f in lint_plan(label, plan):
                 if (f.query, f.node) not in seen:
                     seen.add((f.query, f.node))
                     out.append(f)

@@ -104,52 +104,54 @@ def _load_all() -> None:
 
 
 # Driver-coverage rotation. The driver's per-round correctness gate samples
-# the FIRST 50 entries of queries() in dict order. This round-15 prefix
-# (the r14 staging plan executed) front-loads, in order:
-#   1. ALL 42 queries whose latest passing driver row is still round 9 —
-#      the entire r9 cohort, verified against the latest-round histogram
-#      at the start of round 15 (r9×42, r10×50, r11×45, r12×48, r13×50,
-#      r14×50, never×2). Note two touched-this-round names (dd18, ret02)
-#      are in this cohort — their r15 rewrites get a same-round driver
-#      row, exactly the freshness the rotation exists to provide.
-#   2. the two staged round-14 additions with no driver row yet: dd25
-#      (simhash recall audit) and cls02 (classifier AUC audit) — the
-#      zero-slack r14 rotation queued them here; DRIVER_STAGED_NEXT_ROUND
-#      is emptied in the same commit, per its contract.
-#   3. 6 fill slots from the r10 cohort, oldest-first alphabetical:
-#      cur09, dd08, dd19, dq09, ev19, ing01.
-# 42 + 2 + 6 = 50 exactly. Nothing is removed — every query stays
+# the FIRST 50 entries of queries() in dict order. This prefix
+# front-loads, in order:
+#   1. the four timed plans rewritten in round 15 whose last driver row
+#      predates the rewrite: x26 (r11), sim11 (r13), decon01 (r11) and
+#      dq05 (r13). sim11 now precedes ret02's sim01_truth consumer; the
+#      plan lint keys that shared build's findings by build name, so the
+#      order does not matter to it.
+#   2. ALL 44 queries whose latest passing driver row is still round 10
+#      (histogram after round 15: r10×44, r11×45, r12×48, r13×50,
+#      r14×50, r15×50, never×0), alphabetical.
+#   3. 2 fill slots from the r11 cohort, oldest-first alphabetical:
+#      chunk01, cur01.
+# 4 + 44 + 2 = 50 exactly. Nothing is removed — every query stays
 # registered and the pytest mirror in tests/test_queries_oracle.py
 # still covers all of them.
 _DRIVER_SAMPLE_PREFIX = [
-    "cur07_html_main_text", "cur08_gopher_rules",
-    "dd01_exact_dup_groups", "dd02_dedup_keep_first",
-    "dd05_ngram_jaccard", "dd06_simhash", "dd07_simhash_hamming",
-    "dd18_prefix_filter_join", "dq08_fd_profile", "hh02_countmin_audit",
-    "ing21_offset_pagination", "maint01_compaction_plan",
-    "maint02_retention_plan", "maint03_zone_map_skip",
-    "mix03_anneal_schedule", "pack03_packing_efficiency",
-    "q51_hll_mergeable_distinct", "ret02_ann_rank_quality",
-    "samp07_dsir_importance", "samp08_temporal_split",
-    "sim12_pq_topk", "sim13_mmr_rerank", "sim14_sq8_topk",
-    "st15_journey_patterns_live", "st16_countmin_live",
-    "tx24_tokenizer_fertility", "udtf01_bigram_expand",
-    "w04_running_sum", "w05_ntile", "w06_first_last",
-    "w12_time_range_window",
-    *[f"x{i:02d}" for i in range(1, 11)], "x25_mad_outliers",
-    "dd25_simhash_recall_audit", "cls02_classifier_auc_audit",
-    "cur09_pseudonymize_ids", "dd08_embedding_near_dup",
-    "dd19_span_dedup", "dq09_fd_profile_sampled",
-    "ev19_journey_patterns", "ing01_dedup_insert",
+    "x26_weighted_median", "sim11_ann_recall_at_k",
+    "decon01_ngram_overlap", "dq05_referential_integrity",
+    "ing02_blob_bucket_fanout", "ing03_retryable_status",
+    "ing04_headers_redaction", "ing05_normalized_emission",
+    "ing06_watermark_advance", "ing07_attempt_numbering",
+    "ing08_run_summary", "ing09_size_gates",
+    "ing10_pdf_url_classifier", "ing11_parallel_array_unnest",
+    "ing12_envelope_coalesce", "ing13_corrupt_quarantine",
+    "ing14_canonical_json", "ing15_header_dispatch",
+    "ing16_json_or_text_fallback", "ing17_request_mapper",
+    "ing18_bloom_dedup_insert", "ing19_merge_upsert",
+    "ing20_incremental_agg_merge",
+    "qsql01_topk_per_nation_shared_sql", "qsql02_grouping_sets_shared_sql",
+    "qsql03_exists_not_exists_shared_sql", "qsql04_window_frames_shared_sql",
+    "qsql05_set_ops_shared_sql", "qsql06_correlated_scalar_shared_sql",
+    "qsql07_lateral_topk_shared_sql",
+    "sim01_cosine_topk", "sim02_lsh_bucket_ann", "sim03_vector_norms",
+    "sim04_ivf_assign", "sim05_ivf_probe_topk", "sim07_pq_codes",
+    "sim08_pq_adc_topk",
+    "st01_tumbling_window", "st02_sliding_window", "st03_sessionization",
+    "st04_dedup_within_watermark", "st05_watermark_sync_state",
+    "st17_span_dedup_live",
+    "w07_range_frame", "w08_distribution_functions", "w09_locf_gap_fill",
+    "w10_share_of_total", "w11_rolling_percentile_bands",
+    "chunk01_sliding_chunks", "cur01_domain_cap",
 ]
 
-# Round-15 additions with NO driver row yet, staged for their FIRST row
-# in the next round's prefix. EMPTY this round: r15 is an optimization
-# round and adds no operators; the two r14-staged names (dd25, cls02)
-# were folded into _DRIVER_SAMPLE_PREFIX above, per this list's
-# contract. The freshness gate (tools/round_close.py::
-# leg_driver_freshness) treats ONLY names listed here as allowed to be
-# never-checked outside the prefix.
+# Additions with NO driver row yet, staged for their FIRST row in the
+# next round's prefix. EMPTY: every registered query has a driver row.
+# The freshness gate (tools/round_close.py::leg_driver_freshness)
+# treats ONLY names listed here as allowed to be never-checked outside
+# the prefix.
 DRIVER_STAGED_NEXT_ROUND: list[str] = []
 
 

@@ -196,6 +196,51 @@ def test_weighted_median_boundary_convention(spark, tmp_path):
     assert out == {"A": 20.0, "B": 10.0}
 
 
+def test_weighted_median_bucket_boundaries_match_oracle(spark, tmp_path):
+    """The median-bucket search at its edges, against x26's DuckDB
+    oracle: the median is the FIRST price of its bucket (A), and
+    2 * cumw == total lands exactly on a bucket's LAST price (B, and C
+    with fractional weights whose double sums would miss the tie)."""
+    import duckdb
+
+    from api_etl_pipeline_spark.ops import advanced
+    from api_etl_pipeline_spark.registry import all_queries
+
+    w = advanced.X26_BUCKET_WIDTH
+    schema = (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string"
+    )
+    weights = {
+        # bucket 0 ends at cumw 3 (2*3 < 9); bucket 1 opens at cumw 6
+        "A": [(w * 0.25, 2.0), (w * 0.75, 1.0), (w * 1.0, 3.0),
+              (w * 1.5, 1.0), (w * 2.25, 2.0)],
+        # bucket 0 ends at cumw 3 == total / 2; bucket 1 must not win
+        "B": [(w * 0.1, 1.0), (w - 0.01, 2.0), (w * 1.0, 2.0),
+              (w * 3.0, 1.0)],
+        # 0.1 + 0.2 == 0.3 == 0.6 / 2 only in exact decimal
+        "C": [(w - 0.02, 0.1), (w - 0.01, 0.2), (w * 1.0, 0.3)],
+    }
+    rows = []
+    for flag, pws in weights.items():
+        for price, qty in pws:
+            rows.append((len(rows), 1, 1, 1, qty, price, 0.0, 0.0, flag, "O"))
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "lineitem.parquet"))
+    got = {
+        r["l_returnflag"]: r["weighted_median_price"]
+        for r in advanced.x26_weighted_median(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"'{tmp_path}/lineitem.parquet/*.parquet'"
+    )
+    oracle = dict(con.execute(all_queries()["x26_weighted_median"].oracle).fetchall())
+    con.close()
+    assert got == oracle == {"A": w * 1.0, "B": w - 0.01, "C": w - 0.01}
+
+
 def test_bfs_generic_over_bigint_nodes(spark):
     # the dd04-style reuse: node ids are bigints, not strings
     from api_etl_pipeline_spark.ops.graph import bfs_distances

@@ -26,7 +26,7 @@ def test_lint_capture_is_order_independent(spark):
     coverage vacuous: lint_registry resets the session construction
     caches so each group's first consumer always captures its
     pre-checkpoint plans (regression: a test that constructed gr01
-    earlier in the process made gr01_pagerank+ckpt allowlist entries
+    earlier in the process made gr01's +ckpt allowlist entries
     go stale)."""
     from api_etl_pipeline_spark import _memo
     from api_etl_pipeline_spark.checkpoint import checkpoint_observer
@@ -48,3 +48,23 @@ def test_lint_capture_is_order_independent(spark):
     assert any("SortMergeJoin" in p for p in captured) and any(
         "BroadcastNestedLoopJoin" in p for p in captured
     ), "gr01's per-round join shapes must be visible to the lint"
+
+
+def test_shared_build_checkpoints_carry_the_build_name(spark):
+    """A shared build's checkpoint is labelled with the build, not with
+    whichever consumer constructs first: sim11 before ret02 still lints
+    the sim01_truth plan under its one allowlist entry."""
+    from api_etl_pipeline_spark import _memo
+    from api_etl_pipeline_spark.checkpoint import checkpoint_observer
+    from api_etl_pipeline_spark.registry import all_queries
+
+    _memo._MEMO.clear()
+    captured: list[tuple[str | None, str]] = []
+    with checkpoint_observer(
+        lambda df: captured.append((_memo.building(), plan_lint.plan_text(df)))
+    ):
+        all_queries()["sim11_ann_recall_at_k"].fn(spark, SF_SMOKE)
+    truth = [plan for build, plan in captured if build == "sim01_truth"]
+    assert truth, f"no sim01_truth capture: {[b for b, _ in captured]}"
+    findings = plan_lint.lint_plan("sim01_truth+ckpt", truth[0])
+    assert any(f.node == "BroadcastNestedLoopJoin" and f.allowed for f in findings)

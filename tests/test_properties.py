@@ -434,3 +434,56 @@ def test_next_fit_packing_invariants(sizes, target):
             assert end_cum - members[-1] < (g + 1) * target
             # overshoot bounded by one file
             assert total_g < target + members[-1]
+
+
+# --- exact money sums on integer lanes (ops/_compat.exact_sum) -------------
+
+
+def test_exact_sum_equals_decimal_cast_sum(spark):
+    """For seeded ≤s-decimal values, negatives included, the two-lane
+    bigint sum equals Spark's decimal sum to the last digit at scales 2,
+    4 and 6 — also for a group whose unscaled total exceeds int64."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from api_etl_pipeline_spark.ops._compat import exact_sum
+
+    rng = random.Random(20261017)
+    for scale in (2, 4, 6):
+        rows = [
+            (g, rng.randint(-10**9, 10**9) / 10**scale)
+            for g in range(4)
+            for _ in range(250)
+        ]
+        # 20 rows of 9e17 unscaled units: the total, 1.8e19, is past int64
+        big = 9.0 * 10 ** (17 - scale)
+        rows += [(9, big)] * 20
+        df = spark.createDataFrame(rows, "g int, x double")
+        out = df.groupBy("g").agg(
+            exact_sum(F.col("x"), scale).alias("lanes"),
+            F.sum(F.col("x").cast(f"decimal(18,{scale})")).alias("dec"),
+        ).collect()
+        assert len(out) == 5
+        for r in out:
+            assert r["lanes"] == r["dec"], (scale, r)
+        totals = {r["g"]: r["lanes"] for r in out}
+        assert totals[9] * 10**scale > 2**63
+
+
+def test_exact_sum_overflow_raises(spark):
+    """Out-of-range input fails the query instead of wrapping: a row
+    whose unscaled value is past int64, and a hi lane pushed past int64
+    (2^21 rows of ~2^63 unscaled units)."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from api_etl_pipeline_spark.ops._compat import exact_sum
+
+    one_row = spark.createDataFrame([(1.0e16,)], "x double")
+    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+        one_row.agg(exact_sum(F.col("x"), 4)).collect()
+    many = spark.range(1 << 21).select(F.lit(9.2e14).alias("x"))
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        many.agg(exact_sum(F.col("x"), 4)).collect()

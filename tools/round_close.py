@@ -166,15 +166,12 @@ def _scan_audit_allowlist() -> set[str]:
         #   pass (the sim01 probe-vs-corpus class); the candidate set
         #   is checkpointed so the lattice sides do NOT re-scan
         "sim13_mmr_rerank",
-        # round 15: x26 — the two-phase exact weighted median's bucket
-        #   subtotals aggregate the fact table directly (map-side
-        #   combined to ~1.2k (flag, bucket) groups) instead of
-        #   deriving from the per-price relation, because the join's
-        #   pushed-down null filters made the branches non-identical
-        #   and defeated ReuseExchange (measured: deriving from
-        #   per_price ran the (flag, price) aggregation twice, 1.4 s vs
-        #   1.1 s). Two concurrent scans, one narrow counting pass —
-        #   the multi-phase-statistics class (x25's exact-MAD floor).
+        # x26 — the exact weighted median reads lineitem twice: a
+        #   bucket-grain pass (map-side combined to ~1.2k (flag, bucket)
+        #   groups) finds each flag's median bucket, then a second pass,
+        #   broadcast-joined to that 3-row target, aggregates per price
+        #   only inside it (the multi-phase-statistics class, x25's
+        #   exact-MAD floor)
         "x26_weighted_median",
         # round 9: ret02 — the ANN leg scans the corpus (sim02 class;
         #   the exact leg is checkpointed) — the sim11 two-leg eval
