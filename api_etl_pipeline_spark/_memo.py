@@ -33,8 +33,8 @@ from pyspark.sql import SparkSession
 
 _MEMO: dict[tuple, Any] = {}
 
-# one-time build walls, keyed by label — bench.shared_walls() merges this
-# with dedup.SHARED_BUILD_WALLS into construction_shared_sec
+# one-time build walls, keyed by label — bench.shared_walls() reports
+# them as construction_shared_sec
 SHARED_BUILD_WALLS: dict[str, float] = {}
 
 # name (key[0]) of the build whose builder is running on this context

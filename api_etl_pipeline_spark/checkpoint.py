@@ -11,10 +11,11 @@ CLUSTER-SCALE CAVEAT (stated once here, inherited by every call site):
 `localCheckpoint` stores blocks on executors and is NOT fault-tolerant —
 an executor loss invalidates the checkpoint and fails the query. On a
 real cluster, set a reliable checkpoint directory
-(`spark.sparkContext.setCheckpointDir("hdfs://…")`) and flip
-RELIABLE=True (or export SPARK_GRAFT_RELIABLE_CHECKPOINT=1) so these
-sites use `DataFrame.checkpoint` instead; local[...] test runs keep the
-executor-local fast path, where driver==executor makes the caveat moot.
+(`spark.sparkContext.setCheckpointDir("hdfs://…")`) and export
+SPARK_GRAFT_RELIABLE_CHECKPOINT=1 so these sites use
+`DataFrame.checkpoint` instead (read on every call, see
+`reliable_enabled`); local[...] test runs keep the executor-local fast
+path, where driver==executor makes the caveat moot.
 """
 
 from __future__ import annotations
@@ -38,10 +39,6 @@ def reliable_enabled() -> bool:
         "no",
     )
 
-
-# import-time snapshot, kept for introspection/back-compat; the
-# checkpoint functions consult reliable_enabled() live
-RELIABLE = reliable_enabled()
 
 # Pre-checkpoint observer (round-5 advice): checkpointing REPLACES the
 # plan with an RDD scan, so anything the linter would have flagged in an

@@ -23,7 +23,6 @@ HashAggregate); no float accumulation anywhere.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -648,50 +647,28 @@ def connected_components(
     return labels
 
 
-# Shared near-dup component map (r13 verdict task 2a): dd09, dd10 and
-# samp06 all consume connected_components(dd04_minhash_lsh_pairs(...))
-# and — before round 14 — each rebuilt the identical pair set AND
-# re-iterated the identical component loop at query-construction time
-# (42 s of the r13 bench's 111.8 s construction wall, the single
-# largest cost in the repo). One checkpointed map per (session,
-# sf_dir, geometry) is driver-hash-neutral: the cached DataFrame is
-# the same checkpointed labels relation every consumer would have
-# built itself. Keyed on applicationId so a fresh SparkSession (tests
-# spin several) never sees another session's dead RDD blocks; stale
-# sessions' entries are pruned on insert. The build wall is recorded
-# in SHARED_BUILD_WALLS so bench.py can report the one-time cost
-# honestly (a min-of-runs per-query timer would otherwise show ~0 for
-# all three consumers and the cost would vanish from the drift
-# tooling).
-_COMPONENTS_CACHE: dict[tuple, DataFrame] = {}
-SHARED_BUILD_WALLS: dict[str, float] = {}
-
-
+# Shared near-dup component map: dd09, dd10 and samp06 all consume
+# connected_components(dd04_minhash_lsh_pairs(...)), which otherwise
+# rebuilds the pair set and re-iterates the component loop at every
+# consumer's construction. One checkpointed map per (session, sf_dir,
+# geometry) leaves every result unchanged: it is the same labels relation
+# every consumer would have built itself. The build wall lands in
+# _memo.SHARED_BUILD_WALLS, since a min-of-runs per-query timer shows ~0
+# for all three consumers.
 def dd04_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (vertex, component) map over dd04's production-geometry LSH
     candidate pairs — built once per (session, sf_dir, geometry) and
     shared by every consumer (dd09/dd10/samp06)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        N_MINHASH,
-        N_BANDS,
-        ROWS_PER_BAND,
-    )
-    got = _COMPONENTS_CACHE.get(key)
-    if got is None:
-        t0 = time.perf_counter()
-        got = connected_components(
+    from api_etl_pipeline_spark._memo import session_memo
+
+    return session_memo(
+        spark,
+        ("dd04_components", sf_dir, N_MINHASH, N_BANDS, ROWS_PER_BAND),
+        lambda: connected_components(
             dd04_minhash_lsh_pairs(spark, sf_dir), src="doc_a", dst="doc_b"
-        )
-        wall_key = f"dd04_components[{os.path.basename(str(sf_dir).rstrip('/'))}]"
-        SHARED_BUILD_WALLS[wall_key] = (
-            SHARED_BUILD_WALLS.get(wall_key, 0.0) + (time.perf_counter() - t0)
-        )
-        for stale in [k for k in _COMPONENTS_CACHE if k[0] != key[0]]:
-            del _COMPONENTS_CACHE[stale]
-        _COMPONENTS_CACHE[key] = got
-    return got
+        ),
+        wall_label=f"dd04_components[{os.path.basename(str(sf_dir).rstrip('/'))}]",
+    )
 
 
 _DUCK_CLOSURE = """

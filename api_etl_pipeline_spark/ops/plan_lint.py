@@ -451,8 +451,8 @@ LOCAL_SCAN_OK = {
 # markers (tools/gen_plans.py) plus any additions since.
 #
 # Round 14: queries that consume SHARED once-per-process builds
-# (dedup.dd04_components, the _memo session builds: lsh_bands, the
-# dd16 audit fixtures, the graph iteration states) capture those
+# (the _memo session builds: dd04_components, lsh_bands, the dd16
+# audit fixtures, the graph iteration states) capture those
 # checkpoints only in whichever consumer constructs FIRST in a
 # process; the vacuous-capture guard treats each build as satisfied
 # once any member captured (or the cache already holds it), so the
@@ -655,10 +655,8 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
     # test run that warmed gr01_ranks first silently skipped gr01's
     # per-round plan lint and flagged its allowlist entries stale.
     from api_etl_pipeline_spark import _memo
-    from api_etl_pipeline_spark.llm_ops import dedup as _dedup
 
     _memo._MEMO.clear()
-    _dedup._COMPONENTS_CACHE.clear()
     groups_satisfied: set[str] = set()
     shared_builds = {b for bs in SHARED_CHECKPOINT_GROUPS.values() for b in bs}
     for name, spec in all_queries().items():

@@ -135,18 +135,21 @@ def test_dd04_components_cache_reuse(spark):
     SAME DataFrame object for repeated (session, sf, geometry) calls —
     consumers share one build — and record its build wall exactly once
     per key."""
+    from api_etl_pipeline_spark import _memo
     from api_etl_pipeline_spark.llm_ops import dedup
 
-    dedup._COMPONENTS_CACHE.clear()
-    dedup.SHARED_BUILD_WALLS.clear()
+    dedup.dd04_minhash_lsh_pairs(spark, SF_01)  # warm the builds it nests
+    for key in [k for k in _memo._MEMO if k[1] == "dd04_components"]:
+        del _memo._MEMO[key]
+    _memo.SHARED_BUILD_WALLS.clear()
     a = dedup.dd04_components(spark, SF_01)
     b = dedup.dd04_components(spark, SF_01)
     assert a is b
-    assert list(dedup.SHARED_BUILD_WALLS) == ["dd04_components[sf0.01]"]
-    wall = dedup.SHARED_BUILD_WALLS["dd04_components[sf0.01]"]
+    assert list(_memo.SHARED_BUILD_WALLS) == ["dd04_components[sf0.01]"]
+    wall = _memo.SHARED_BUILD_WALLS["dd04_components[sf0.01]"]
     c = dedup.dd04_components(spark, SF_01)
     assert c is a
-    assert dedup.SHARED_BUILD_WALLS["dd04_components[sf0.01]"] == wall
+    assert _memo.SHARED_BUILD_WALLS["dd04_components[sf0.01]"] == wall
 
 
 def _py_cls02(sf_dir: str):

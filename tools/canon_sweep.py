@@ -10,9 +10,11 @@ representation divergence (Decimal vs float64, datetime.date vs
 datetime64, NaN spelling, bool casing) fails here even when the value
 mirror passes.
 
-    python tools/canon_sweep.py [first_n]    # default: all registered
+    python tools/canon_sweep.py [name ...]    # default: all registered
 
-Exit code = number of failing queries.
+A failing query is reported with both row counts; a query that raises is
+reported with its error and the sweep goes on. Exit code = number of
+failing queries (2 for an unknown name).
 """
 
 from __future__ import annotations
@@ -45,16 +47,18 @@ def canon_hash(df) -> str:
 
 
 def main() -> int:
+    qs = all_queries()
+    names = sys.argv[1:] or list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     spark = get_spark("canon-sweep")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
-    qs = all_queries()
-    names = list(qs)
-    if len(sys.argv) > 1:
-        names = names[: int(sys.argv[1])]
     bad = 0
     for name in names:
         spec = qs[name]

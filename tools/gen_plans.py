@@ -53,7 +53,6 @@ def main() -> None:
     from api_etl_pipeline_spark.session import get_spark
 
     from api_etl_pipeline_spark import _memo
-    from api_etl_pipeline_spark.llm_ops import dedup as _dedup
 
     spark = get_spark("gen-plans")
     rows = []
@@ -71,7 +70,6 @@ def main() -> None:
         # happens to construct first, making rows order-dependent and
         # letting sharing hide cost from this table.
         _memo._MEMO.clear()
-        _dedup._COMPONENTS_CACHE.clear()
         captured: list[str] = []
         with checkpoint_observer(lambda df: captured.append(plan_text(df))):
             final_plan = plan_text(spec.fn(spark, "/root/testdata/sf0.001"))

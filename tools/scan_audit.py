@@ -40,13 +40,11 @@ def audit(spark, sf_dir: str = SF_DIR) -> dict[str, dict[str, int]]:
     """{query: {table: n_scans}} for queries scanning a big table >= 2x.
     NOTE: a localCheckpoint boundary truncates the visible plan, so a
     query using one (llm02) under-reports here — its lineage scans are
-    counted at checkpoint materialization instead."""
+    counted at checkpoint materialization instead. A query that fails to
+    construct raises: skipping it would read as "no repeated scan"."""
     out: dict[str, dict[str, int]] = {}
     for name, spec in all_queries().items():
-        try:
-            p = plan_text(spec.fn(spark, sf_dir))
-        except Exception:
-            continue
+        p = plan_text(spec.fn(spark, sf_dir))
         tables = re.findall(r"InMemoryFileIndex \[[^\]]*?/(\w+)\.parquet", p)
         c = collections.Counter(t for t in tables if t in BIG)
         rep = {t: n for t, n in c.items() if n >= 2}
